@@ -102,17 +102,6 @@ def _km_hashes(g: Column, num_hashes: int) -> list[Column]:
     return [(a + (i + 1) * b) % _MH_PRIME for i in range(num_hashes)]
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int) -> list[Column]:
-    """k minhashes of a shingle array: array_min over the KM hash family.
-
-    md5-as-permutation keeps signatures engine-portable and seed-stable;
-    the k permutations derive from one digest per shingle (:func:`_km_hashes`)."""
-    return [
-        F.array_min(F.transform(shingle_col, lambda s, i=i: _km_hashes(s, i + 1)[i]))
-        for i in range(num_hashes)
-    ]
-
-
 def _token_grams(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> DataFrame:
     """(id, g) token shingles via posexplode + window LEAD instead of the
     array-lambda shingles() column: per-token codegen'd string ops replace

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -48,11 +48,6 @@ def fk_orphans(fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str) -> 
     (manufacturing.sql:220-225 uses left-join + IS NULL; anti-join is the
     idiomatic Spark plan — same semantics, no null-padding materialized)."""
     return fact.join(dim, fact[fact_key] == dim[dim_key], "left_anti")
-
-
-def temporal_violations(df: DataFrame, ts_col: str, not_before: Column) -> DataFrame:
-    """Q5: events before an install/open horizon (manufacturing.sql:228-241)."""
-    return df.filter(F.col(ts_col) < not_before)
 
 
 @dataclass

@@ -254,22 +254,6 @@ def winnow_fingerprints(col: Column, k: int = 5, w: int = 4) -> Column:
     return F.array_sort(F.array_distinct(mins))
 
 
-def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """One-pass enrichment: all text features as columns (map-only)."""
-    c = F.col(text_col)
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col),
-        token_count(c).alias("n_tokens"),
-        char_count(c).alias("n_chars_obs"),
-        F.round(punct_ratio(c), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(c), 6).alias("stopword_ratio"),
-        quality_score(c).alias("quality_score"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-        rolling_fingerprint(c).alias("rolling_fp"),
-    )
-
-
 def winnow_fingerprint_rows(
     df: DataFrame,
     text_col: str = "text",

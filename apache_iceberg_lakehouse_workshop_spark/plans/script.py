@@ -22,14 +22,15 @@ router so those scripts execute end-to-end against a :class:`Lakehouse`:
 Multi-part names (``dremio.finance.raw.trades``) are resolved by
 registering each lake table as a temp view named with ``__`` separators and
 rewriting references in query text (code regions only — string literals
-are never touched). Views re-materialize before every statement, so a
-query always sees the current table snapshots. That refresh is metadata-
-only (lazy DataFrames over the current file list) — at 100 TB it costs a
-JSON read per table, not a data scan.
+are never touched). Before every statement the runner checks each table's
+``metadata.json`` digest and the grants, and re-registers only the tables,
+views and reflections whose tables committed since: a query always sees
+the current snapshots, and a table's registration is paid once per commit.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
 import uuid
@@ -267,9 +268,20 @@ _RE_MEASURE_ITEM = re.compile(r"(\w+)\s*(?:\(([^)]*)\))?")
 _RE_VIEW = re.compile(
     r"^CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+([\w.]+)\s+AS\s+(.*)$", re.I | re.S
 )
+# per-table metadata views: `<leaf>__snapshots` / `__history` / `__refs`,
+# spelled directly or as the TABLE(table_snapshot|history|refs('t')) TVFs
+# dialect.translate maps to them
+_META_KINDS = ("snapshots", "history", "refs")
+_RE_META_VIEW = re.compile(r"\b(\w+?)__(snapshots|history|refs)\b")
+_RE_META_TVF = re.compile(r"table_(snapshot|history|refs)\s*\(\s*'([\w.]+)'", re.I)
 _RE_PARTITION = re.compile(r"\bPARTITION\s+BY\s*\(", re.I)
 _RE_DISTRIBUTE = re.compile(r"\bDISTRIBUTE\s+BY\s*\(", re.I)
 _RE_LOCALSORT = re.compile(r"\bLOCALSORT\s+BY\s*\(", re.I)
+
+
+def _mentions(text: str, name: str) -> bool:
+    """``name`` occurs in ``text`` as a whole (possibly dotted) name."""
+    return re.search(r"(?<![\w.`])" + re.escape(name) + r"(?![\w.])", text) is not None
 
 
 def _clause(pattern: re.Pattern, text: str) -> str | None:
@@ -468,6 +480,11 @@ class ScriptRunner:
         # LIST_FILES paths resolves to source_roots['name'] + '/rest'
         # (example.sql:14 '@s3/...'). Unmapped handles raise.
         self.source_roots = dict(source_roots or {})
+        # temp view name -> (registration key, the session's view object as
+        # registered); see _refresh
+        self._registered: dict[str, tuple] = {}
+        self._denied: set[str] = set()
+        self._refreshing = False
 
     def _resolve_path(self, path: str) -> str:
         if not path.startswith("@"):
@@ -488,13 +505,20 @@ class ScriptRunner:
     def _vname(full: str) -> str:
         return full.replace(".", "__")
 
-    def _known_names(self) -> list[str]:
-        names = set(self.lake._walk_tables()) | set(self.views)
+    @staticmethod
+    def _leaf_names(full: str) -> list[str]:
+        """Temp view names a table registers besides its ``__`` name: its
+        leaf, then the leaf's metadata views (in ``_META_KINDS`` order)."""
+        leaf = full.split(".")[-1]
+        return [leaf, *(f"{leaf}__{kind}" for kind in _META_KINDS)]
+
+    def _known_names(self, tables: list[str] | None = None) -> list[str]:
+        names = set(self.lake._walk_tables() if tables is None else tables) | set(self.views)
         # longest-first so a.b.c rewrites before a.b
         return sorted(names, key=len, reverse=True)
 
-    def _rewrite_names(self, sql: str) -> str:
-        names = self._known_names()
+    def _rewrite_names(self, sql: str, names: list[str] | None = None) -> str:
+        names = self._known_names() if names is None else names
 
         def rewrite(code: str) -> str:
             for full in names:
@@ -506,58 +530,139 @@ class ScriptRunner:
 
         return dialect._map_code_regions(sql, rewrite)
 
-    def _refresh(self) -> None:
-        """(Re-)register every table + stacked view as temp views. Lazy
-        DataFrames over current snapshots — metadata cost only.
+    def _refresh(self, sql: str = "") -> None:
+        """Register every lake table, stacked view and reflection as a temp
+        view, paying only for what changed since the last statement.
 
+        Contract: every statement sees the latest commit of every table and
+        the current grants, and each table's registration is paid once per
+        commit. A table is keyed on a digest of its ``metadata.json``, which
+        every commit, schema change, rollback, tag and branch rewrites; while
+        the digest holds, the registered lazy DataFrame still reads the
+        current snapshot. Views and reflections are keyed on the digests of
+        the tables under them. A name whose temp view in the session is no
+        longer the one registered here (user code replaced or dropped it) is
+        registered again. The ``<leaf>__snapshots`` / ``__history`` /
+        ``__refs`` views exist only while ``sql`` or a view body names them.
+
+        The SELECT grants check runs for every table on every statement.
         Under ``enforce_grants`` a table the user may not SELECT is skipped
-        (recorded in ``self._denied``) instead of failing the whole refresh
-        — one unreadable table must not break scripts over readable ones;
-        ``_query`` raises PermissionError only when the SQL actually names
-        a denied table. Engine-internal reflection storage
+        (recorded in ``self._denied``, its views dropped) instead of failing
+        the whole refresh — one unreadable table must not break scripts over
+        readable ones; ``_query`` raises PermissionError only when the SQL
+        actually names a denied table. Engine-internal reflection storage
         (``_reflections.*``) is never user-gated: it materializes data the
         user was already authorized to read on the anchored dataset."""
-        self._denied: set[str] = set()
-        for full in self.lake._walk_tables():
+        if self._refreshing:
+            # a stale reflection's definition re-enters through the
+            # accelerator's prepare hook; tables and views are registered
+            return
+        self._refreshing = True
+        try:
+            self._register_all(sql)
+        finally:
+            self._refreshing = False
+
+    def _register_all(self, sql: str) -> None:
+        tables = self.lake._walk_tables()
+        named_meta = {
+            (leaf, kind) for leaf, kind in
+            _RE_META_VIEW.findall(" ".join([sql, *self.views.values()]))
+        } | {
+            (name.split(".")[-1], {"snapshot": "snapshots"}.get(kind.lower(), kind.lower()))
+            for kind, name in _RE_META_TVF.findall(sql)
+        }
+        # name -> (key, build): build is the SQL that registers the view or
+        # a thunk returning the DataFrame to register. Later entries win a
+        # shared name (a reflection over its storage table's leaf) and move
+        # to the end, after everything they read.
+        wanted: dict[str, tuple] = {}
+        gone: set[str] = set()
+
+        def want(name: str, key: tuple, build) -> None:
+            wanted.pop(name, None)
+            wanted[name] = (key, build)
+            gone.discard(name)
+
+        tokens: dict[str, bytes] = {}
+        self._denied = set()
+        for full in tables:
             t = self.lake.table(full)
+            leaf, *meta_names = self._leaf_names(full)
             if full.split(".", 1)[0] == "_reflections":
                 t._acl = None
-            leaf0 = full.split(".")[-1]
             try:
-                df = t.read()
+                if t._acl is not None:
+                    t._acl(("SELECT",), full)  # the check read() runs
             except PermissionError:
-                self._denied.add(full)
-                self._denied.add(leaf0)
-                # drop any view another (authorized) runner registered in
-                # this shared Spark session — a denied user must not read
+                self._denied.update((full, leaf))
+                # also drops views another (authorized) runner registered in
+                # this shared Spark session: a denied user must not read
                 # through a stale temp view
-                for v in (self._vname(full), leaf0, f"{leaf0}__snapshots",
-                          f"{leaf0}__history", f"{leaf0}__refs"):
-                    self.spark.catalog.dropTempView(v)
+                for name in (self._vname(full), leaf, *meta_names):
+                    wanted.pop(name, None)
+                    gone.add(name)
                 continue
-            df.createOrReplaceTempView(self._vname(full))
-            leaf = full.split(".")[-1]
-            df.createOrReplaceTempView(leaf)
-            t.snapshots().createOrReplaceTempView(f"{leaf}__snapshots")
-            t.history().createOrReplaceTempView(f"{leaf}__history")
-            t.refs().createOrReplaceTempView(f"{leaf}__refs")
-        for vfull, body in self.views.items():
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMP VIEW {self._vname(vfull)} AS "
-                + self._rewrite_names(body)
-            )
-            leaf = vfull.split(".")[-1]
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMP VIEW {leaf} AS "
-                f"SELECT * FROM {self._vname(vfull)}"
-            )
+            with open(t._meta_path, "rb") as f:
+                tok = tokens[full] = hashlib.blake2b(f.read(), digest_size=16).digest()
+            read = functools.cache(t.read)
+            want(self._vname(full), ("table", full, tok), read)
+            want(leaf, ("table", full, tok), read)
+            for kind, name in zip(_META_KINDS, meta_names):
+                if (leaf, kind) in named_meta:
+                    want(name, ("meta", full, tok), getattr(t, kind))
+
+        names = self._known_names(tables)
+        view_keys: dict[str, tuple] = {}
+
+        def view_key(v: str, outer: tuple = ()) -> tuple:
+            # the rewritten body plus the digests of every table under it,
+            # through the views it stacks on
+            if v not in view_keys:
+                body = self.views[v]
+                deps = tuple(
+                    (t, tokens.get(t)) for t in tables
+                    if any(_mentions(body, n) for n in (t, *self._leaf_names(t)))
+                )
+                subs = tuple(
+                    view_key(u, outer + (v,)) for u in self.views
+                    if u != v and u not in outer
+                    and (_mentions(body, u) or _mentions(body, u.split(".")[-1]))
+                )
+                view_keys[v] = ("view", self._rewrite_names(body, names), deps, subs)
+            return view_keys[v]
+
+        for v in self.views:
+            key = view_key(v)
+            vname = self._vname(v)
+            want(vname, key, f"CREATE OR REPLACE TEMP VIEW {vname} AS {key[1]}")
+            want(v.split(".")[-1], key, f"CREATE OR REPLACE TEMP VIEW "
+                 f"{v.split('.')[-1]} AS SELECT * FROM {vname}")
         # reflections are queryable by name: materialized scan when fresh,
         # transparent recompute when stale (accelerator.resolve contract)
         if hasattr(self, "_accelerator"):
-            for entry in self._accelerator.status():
-                self._accelerator.resolve(entry["name"]).createOrReplaceTempView(
-                    entry["name"]
-                )
+            every_view = tuple(view_keys.values())
+            for e in self._accelerator.status():
+                deps = tuple(tokens.get(t) for t in [*e["anchors"], e["storage"]])
+                want(e["name"], ("reflection", e["fresh"], deps, every_view),
+                     functools.partial(self._accelerator.resolve, e["name"]))
+
+        gone |= set(self._registered) - set(wanted)
+        for name in gone:
+            self.spark.catalog.dropTempView(name)
+            self._registered.pop(name, None)
+        # getRawTempView returns the stored view object itself, so equals()
+        # against the one kept at registration is an identity check
+        catalog = self.spark._jsparkSession.sessionState().catalog()
+        for name, (key, build) in wanted.items():
+            have = self._registered.get(name)
+            if have and have[0] == key and have[1].equals(catalog.getRawTempView(name)):
+                continue
+            if isinstance(build, str):
+                self.spark.sql(build)
+            else:
+                build().createOrReplaceTempView(name)
+            self._registered[name] = (key, catalog.getRawTempView(name))
 
     # ------------------------------------------------------------ handlers
 
@@ -725,9 +830,9 @@ class ScriptRunner:
         )
 
     def _query(self, sql: str) -> DataFrame:
-        self._refresh()
-        for name in sorted(getattr(self, "_denied", ()), key=len, reverse=True):
-            if re.search(r"(?<![\w.`])" + re.escape(name) + r"(?![\w.])", sql):
+        self._refresh(sql)
+        for name in sorted(self._denied, key=len, reverse=True):
+            if _mentions(sql, name):
                 raise PermissionError(
                     f"user {self.lake.current_user!r} lacks SELECT on {name!r}"
                 )
@@ -773,19 +878,14 @@ class ScriptRunner:
         while stack:
             body = stack.pop()
             for t in tables:
-                if re.search(r"(?<![\w.`])" + re.escape(t) + r"(?![\w.])", body):
+                if _mentions(body, t):
                     anchors.add(t)
             for leaf, fulls in leaf_tables.items():
-                if len(fulls) == 1 and re.search(
-                    r"(?<![\w.`])" + re.escape(leaf) + r"(?![\w.])", body
-                ):
+                if len(fulls) == 1 and _mentions(body, leaf):
                     anchors.add(fulls[0])
             for v, vbody in self.views.items():
                 names = {v, v.split(".")[-1]}
-                if v not in seen and any(
-                    re.search(r"(?<![\w.`])" + re.escape(n) + r"(?![\w.])", body)
-                    for n in names
-                ):
+                if v not in seen and any(_mentions(body, n) for n in names):
                     seen.add(v)
                     stack.append(vbody)
         return sorted(anchors)
@@ -1391,11 +1491,12 @@ class ScriptRunner:
 
     def _register_file_meta_views(self, sql: str) -> None:
         """JIT-register `<leaf>__files` / `<leaf>__partitions` metadata
-        views for tables the statement actually references. Unlike
-        snapshots/history (metadata-JSON cheap, registered eagerly in
-        _refresh), partitions() reads parquet footers — doing that for
-        every table on every statement would turn each run() into a
-        metadata crawl."""
+        views for tables the statement actually references. Unlike the
+        snapshots/history/refs views (metadata-JSON cheap, kept across
+        statements by _refresh), these are rebuilt whenever named:
+        partitions() reads parquet footers, and doing that for every
+        table on every statement would turn each run() into a metadata
+        crawl."""
         wanted = {
             (leaf, kind.lower())
             for leaf, kind in re.findall(
@@ -1487,12 +1588,10 @@ class ScriptRunner:
         while stack:
             body = stack.pop()
             for t in tables:
-                if re.search(r"(?<![\w.`])" + re.escape(t) + r"(?![\w.])", body):
+                if _mentions(body, t):
                     anchors.add(t)
             for v, vbody in self.views.items():
-                if v not in seen and re.search(
-                    r"(?<![\w.`])" + re.escape(v) + r"(?![\w.])", body
-                ):
+                if v not in seen and _mentions(body, v):
                     seen.add(v)
                     stack.append(vbody)
         return sorted(anchors)

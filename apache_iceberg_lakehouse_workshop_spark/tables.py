@@ -2,7 +2,7 @@
 
 The driver ships deterministic TPC-H-ish parquet under
 ``/root/testdata/sf{0.001,0.01,0.1}`` (see ``/root/repo/TESTDATA.md``).
-Helpers here load them as DataFrames / temp views with the canonical names
+Helpers here load them as DataFrames under the canonical names
 used by the oracle (``region nation customer supplier part orders lineitem
 events documents embeddings``).
 """
@@ -59,9 +59,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register testdata tables as temp views so ``spark.sql`` queries can
-    reference them by bare name (same names the DuckDB oracle uses)."""
-    for name in names or TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -892,6 +892,27 @@ def test_cdc_presence_check_prunes_ids_sidecar(spark, sf_dir, lake):
     } == {r.vec_id for r in lake.table("ann.corpus").read().collect()}
 
 
+def test_cdc_delete_of_uncastable_id_declines_to_reencode(spark, sf_dir, lake):
+    """A deleted row whose id casts to NULL names no codes row the CDC
+    path can delete: the refresh declines to the full re-encode instead
+    of advancing the watermark with the delete unapplied."""
+    emb = _emb(spark, sf_dir, 200).select(
+        F.col("vec_id").cast("string").alias("vec_id"), "embedding"
+    )
+    lake.create_table_as("ann.corpus", emb)
+    AX.build_ann_index(lake, "ann.corpus", "ann.idx", **KW)
+    lake.table("ann.corpus").append(
+        emb.limit(1).select(F.lit("x1").alias("vec_id"), "embedding")
+    )
+    assert AX.refresh_ann_index(lake, "ann.idx")["mode"] == "incremental"
+    first = emb.first().vec_id
+    lake.table("ann.corpus").delete_where(f"vec_id IN ('{first}', 'x1')")
+    assert AX.refresh_ann_index(lake, "ann.idx")["mode"] == "reencode"
+    codes_ids = [r.cand_id for r in lake.table("ann.idx_codes").read().collect()]
+    assert len(codes_ids) == 199 * KW["m_sub"]
+    assert int(first) not in codes_ids
+
+
 def test_cdc_codes_delete_scan_prunes_by_cells(spark, sf_dir, lake, monkeypatch):
     """r12: the CDC codes delete re-encodes the delete pre-images through
     the exact build path (frozen quantizers) to recover each deleted id's

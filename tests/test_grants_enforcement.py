@@ -182,3 +182,28 @@ def test_reflection_routing_never_denies_a_permitted_query(spark, tmp_path):
     }
     # and it genuinely routed (else the test proves nothing)
     assert any("_reflections" in f for f in out.inputFiles())
+
+
+def test_script_runner_rechecks_grants_every_statement(spark, tmp_path):
+    """The runner keeps a table registered across statements, but never
+    past a grant: after a REVOKE, or a switch of current_user, the next
+    statement naming the table raises PermissionError and the table's
+    leaf view is gone from the session."""
+    root = str(tmp_path / "wh")
+    admin = Lakehouse(spark, root)
+    _seed(admin, spark)
+    admin.grant(["SELECT"], "TABLE", "db.sales", "USER", "ana")
+    lake = Lakehouse(spark, root, enforce_grants=True, current_user="ana")
+    assert lake.run_script("SELECT * FROM db.sales").count() == 1
+    assert spark.catalog.tableExists("sales")
+    admin.revoke(["SELECT"], "TABLE", "db.sales", "USER", "ana")
+    with pytest.raises(PermissionError, match="SELECT"):
+        lake.run_script("SELECT * FROM db.sales")
+    assert not spark.catalog.tableExists("sales")
+
+    admin.grant(["SELECT"], "TABLE", "db.sales", "USER", "ana")
+    assert lake.run_script("SELECT * FROM sales").count() == 1
+    lake.current_user = "bob"
+    with pytest.raises(PermissionError, match="SELECT"):
+        lake.run_script("SELECT * FROM sales")
+    assert not spark.catalog.tableExists("sales")

@@ -1778,3 +1778,119 @@ def test_reserved_stats_keys_never_clobber_user_columns(lake, spark):
     # reserved key is absent), and an int
     est = t.row_count_estimate()
     assert isinstance(est, int) and est == 5
+
+
+# ------------------------------------------- script runner view registry
+
+
+def _count_reads(monkeypatch) -> list[str]:
+    """Names of the tables every LakeTable.read call from now on reads."""
+    from apache_iceberg_lakehouse_workshop_spark.plans.lakeshim import LakeTable
+
+    calls: list[str] = []
+    real = LakeTable.read
+
+    def read(self, *args, **kwargs):
+        calls.append(self.name)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "read", read)
+    return calls
+
+
+def _n(lake, sql: str) -> int:
+    return lake.run_script(sql).first()[0]
+
+
+def test_runner_reads_each_table_once_per_commit(lake, spark, monkeypatch):
+    """A statement over an unchanged lake re-registers nothing: zero
+    LakeTable.read calls. A commit re-reads only the table it touched,
+    and the stacked view over it sees the new rows."""
+    lake.create_table_as("db.raw.orders", _mk_orders(spark))
+    lake.create_table_as("db.raw.other", _mk_orders(spark))
+    lake.run_script(
+        "CREATE VIEW db.gold.big AS SELECT * FROM db.raw.orders WHERE amount > 80"
+    )
+    assert _n(lake, "SELECT COUNT(*) FROM db.gold.big") == 2
+    calls = _count_reads(monkeypatch)
+    assert _n(lake, "SELECT COUNT(*) FROM db.raw.orders") == 3
+    assert _n(lake, "SELECT COUNT(*) FROM db.gold.big") == 2
+    assert calls == []
+    lake.run_script("INSERT INTO db.raw.orders VALUES (4, 12, 500.0, TIMESTAMP '2025-08-03 09:00:00')")
+    calls.clear()
+    assert _n(lake, "SELECT COUNT(*) FROM db.gold.big") == 3
+    assert calls == ["db.raw.orders"]
+
+
+def test_runner_sees_dml_between_statements(lake, spark):
+    """Appends, DELETE and MERGE between two statements are visible to the
+    next one, through both the table and a leaf-named reference."""
+    lake.create_table_as("db.raw.orders", _mk_orders(spark))
+    assert _n(lake, "SELECT COUNT(*) FROM db.raw.orders") == 3
+    lake.table("db.raw.orders").append(
+        _mk_orders(spark).withColumn("order_id", F.col("order_id") + 10)
+    )
+    assert _n(lake, "SELECT COUNT(*) FROM orders") == 6
+    lake.run_script("DELETE FROM db.raw.orders WHERE order_id > 10")
+    assert _n(lake, "SELECT COUNT(*) FROM db.raw.orders") == 3
+    lake.create_table_as(
+        "db.raw.changes",
+        _mk_orders(spark).filter("order_id = 1").withColumn("amount", F.lit(1.0)),
+    )
+    lake.run_script(
+        "MERGE INTO db.raw.orders AS t USING db.raw.changes AS s "
+        "ON t.order_id = s.order_id WHEN MATCHED THEN UPDATE SET *"
+    )
+    assert _n(lake, "SELECT SUM(amount) FROM orders") == 1.0 + 250.0 + 75.0
+
+
+def test_runner_sees_metadata_only_commits(lake, spark):
+    """Commits that change no data files (schema evolution, properties,
+    rollback, tags) are visible to the next statement."""
+    t = lake.create_table_as("db.raw.orders", _mk_orders(spark))
+    first = t.snapshots().first().snapshot_id
+    assert "note" not in lake.run_script("SELECT * FROM db.raw.orders").columns
+    lake.run_script("ALTER TABLE db.raw.orders ADD COLUMN note VARCHAR")
+    assert "note" in lake.run_script("SELECT * FROM db.raw.orders").columns
+    lake.run_script("ALTER TABLE db.raw.orders RENAME COLUMN note TO memo")
+    cols = lake.run_script("SELECT * FROM orders").columns
+    assert "memo" in cols and "note" not in cols
+    lake.run_script("ALTER TABLE db.raw.orders SET TBLPROPERTIES ('owner' = 'ops')")
+    props = lake.run_script("SHOW TBLPROPERTIES db.raw.orders").collect()
+    assert ("owner", "ops") in [(r.key, r.value) for r in props]
+    lake.run_script("ALTER TABLE db.raw.orders CREATE TAG v1")
+    t.append(_mk_orders(spark).withColumn("order_id", F.col("order_id") + 10))
+    assert _n(lake, "SELECT COUNT(*) FROM db.raw.orders") == 6
+    assert _n(lake, "SELECT COUNT(*) FROM db.raw.orders AT TAG 'v1'") == 3
+    lake.run_script(f"ROLLBACK TABLE db.raw.orders TO SNAPSHOT '{first}'")
+    assert _n(lake, "SELECT COUNT(*) FROM db.raw.orders") == 3
+
+
+def test_runner_sees_table_dropped_and_recreated(lake, spark):
+    lake.create_table_as("db.raw.orders", _mk_orders(spark))
+    assert _n(lake, "SELECT COUNT(*) FROM db.raw.orders") == 3
+    lake.run_script("DROP TABLE db.raw.orders")
+    lake.run_script("CREATE TABLE db.raw.orders (order_id INT, amount DOUBLE)")
+    assert _n(lake, "SELECT COUNT(*) FROM db.raw.orders") == 0
+    lake.run_script("INSERT INTO db.raw.orders VALUES (7, 1.5)")
+    assert lake.run_script("SELECT * FROM orders").collect() == [Row(order_id=7, amount=1.5)]
+
+
+def test_runner_reregisters_a_replaced_temp_view(lake, spark):
+    """User code that replaces a leaf view the runner registered does not
+    shadow the lake table on the next statement."""
+    lake.create_table_as("db.raw.orders", _mk_orders(spark))
+    assert _n(lake, "SELECT COUNT(*) FROM orders") == 3
+    spark.range(5).createOrReplaceTempView("orders")
+    assert _n(lake, "SELECT COUNT(*) FROM orders") == 3
+    spark.catalog.dropTempView("orders")
+    assert _n(lake, "SELECT COUNT(*) FROM orders") == 3
+
+
+def test_runner_snapshots_view_shows_later_commits(lake, spark):
+    t = lake.create_table_as("db.raw.orders", _mk_orders(spark))
+    assert _n(lake, "SELECT COUNT(*) FROM orders__snapshots") == 1
+    t.append(_mk_orders(spark))
+    assert _n(lake, "SELECT COUNT(*) FROM orders__snapshots") == 2
+    ops = lake.run_script("SELECT operation FROM TABLE(table_snapshot('db.raw.orders'))")
+    assert [r.operation for r in ops.collect()] == ["overwrite", "append"]

@@ -229,11 +229,19 @@ def test_retail_silver_ctas_stack(lake):
 
 # ---------------------------------------------------------- full sweep
 
-ALL_SCRIPTS = sorted(
-    f
-    for f in os.listdir("/root/reference/industry-examples")
-    if f.endswith(".sql")
-)
+REFERENCE_DIR = os.path.dirname(FINANCE_SQL)
+
+
+def _reference_scripts() -> list[str]:
+    """Every industry-example script. Without the reference tree the sweep
+    still collects: one case that fails when it opens its file, so the
+    rest of this module runs and the missing tree shows as a failure."""
+    if not os.path.isdir(REFERENCE_DIR):
+        return [os.path.basename(FINANCE_SQL)]
+    return sorted(f for f in os.listdir(REFERENCE_DIR) if f.endswith(".sql"))
+
+
+ALL_SCRIPTS = _reference_scripts()
 
 
 @pytest.fixture(scope="module")
@@ -257,7 +265,7 @@ def test_industry_script_verbatim(lake, source_tree, script):
     cannot analyze — bad dialect translation, unresolved LIST_FILES — fails
     here). This is the 'a reference user can paste their workshop scripts
     at the engine' parity claim, script by script."""
-    with open(os.path.join("/root/reference/industry-examples", script)) as f:
+    with open(os.path.join(REFERENCE_DIR, script)) as f:
         sql = f.read()
     roots = {h: source_tree for h in ("s3", "media_files", "media", "logistics_docs")}
     lake.run_script(sql, source_roots=roots)

@@ -664,6 +664,23 @@ def test_cdc_stats_survive_a_corrupted_preimage_feed(
     assert _ranked(got_rank) == _ranked(want_rank)
 
 
+def test_cdc_delete_of_uncastable_id_declines_to_retokenize(spark, lake):
+    """A deleted doc whose id casts to NULL names no index row the CDC
+    path can delete: the refresh declines to the full re-tokenize instead
+    of advancing the watermark with the delete unapplied, and the index
+    then holds exactly the surviving docs."""
+    rows = [(str(i), f"alpha beta w{i}") for i in range(20)]
+    rows.append(("x7", "zeta unique"))
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    lake.create_table_as("tx.docs", docs)
+    TX.build_text_index(lake, "tx.docs", "tx.idx")
+    lake.table("tx.docs").delete_where("doc_id IN ('3', 'x7')")
+    assert TX.refresh_text_index(lake, "tx.idx")["mode"] == "retokenize"
+    indexed = [r.doc_id for r in lake.table("tx.idx_doclen").read().collect()]
+    assert sorted(indexed) == [i for i in range(20) if i != 3]
+    assert TX.bm25_query(lake, "tx.idx", ["w3", "zeta"], n=5).count() == 0
+
+
 def test_cdc_postings_delete_scan_prunes_by_terms(spark, lake, monkeypatch):
     """r12: the CDC postings delete conjoins the verified pre-images'
     vocabulary (`w IN (...)`) to the doc_id predicate, so the
